@@ -42,7 +42,7 @@ from ..functions.text_stats import (
 )
 from ..plans.registry import query
 from .relational import dsum_sql
-from ._util import fan_out, one_group, t
+from ._util import fan_out, local_frame, one_group, t
 
 _SW_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
@@ -73,7 +73,9 @@ def remove_stopwords(tokens: DataFrame, spark: SparkSession, stopwords=STOPWORDS
     HashSet rejection (A6, ProcessData.java:408/416). For a list this small
     an ``isin`` filter would fold into codegen too; the anti-join form is the
     one that scales to million-word blocklists."""
-    sw = spark.createDataFrame([(w,) for w in stopwords], ["token"])
+    if not stopwords:
+        return tokens
+    sw = local_frame(spark, {"token": list(stopwords)}, "token STRING")
     return tokens.join(F.broadcast(sw), "token", "left_anti")
 
 
@@ -90,12 +92,15 @@ def stem_terms(tokens: DataFrame) -> DataFrame:
     return tokens.join(vocab, "token").drop("token")
 
 
-def inverted_index(spark: SparkSession, docs: DataFrame, stem: bool = True) -> DataFrame:
+def inverted_index(
+    spark: SparkSession, docs: DataFrame, stem: bool = True, stopwords=STOPWORDS
+) -> DataFrame:
     """Full Job-1 parity: term → sorted distinct postings (A8+A9).
 
     Returns ``(term, postings ARRAY<INT/LONG>, df INT)``. Distinct-presence
-    semantics via ``collect_set`` (SURVEY Q1)."""
-    toks = remove_stopwords(tokenize(docs), spark)
+    semantics via ``collect_set`` (SURVEY Q1). ``stopwords`` is the A6
+    blocklist (the reference reads it from a side file)."""
+    toks = remove_stopwords(tokenize(docs), spark, stopwords)
     if stem:
         # Stem AFTER the corpus-sized shuffle: aggregate postings by RAW
         # token first (the shuffle an inverted index needs anyway), run the
@@ -129,6 +134,44 @@ def densify_incidence(index: DataFrame, n_docs: int, one_based: bool = True) -> 
     ids = F.sequence(F.lit(start), F.lit(start + n_docs - 1))
     return index.withColumn(
         "vec", F.transform(ids, lambda i: F.array_contains("postings", i).cast("int"))
+    )
+
+
+def nearest_center(points: DataFrame, centers: DataFrame) -> DataFrame:
+    """Job 2's nearest-center assignment (A13+A14, ProcessData.java:521-532,
+    567-576, without the XOR and argmin bugs of SURVEY B1/B2): each point's
+    nearest center by cosine distance over 0/1 incidence SETS.
+
+    ``points`` has a ``postings`` ARRAY column. ``centers`` is ONE row whose
+    ``centers`` column is the ARRAY of center STRUCTs, each with a
+    ``postings`` field; a center's id is its 1-based array position. Returns
+    ``points`` plus ``center_id`` and ``center`` (the winning struct).
+
+    Sparse cosine: for 0/1 vectors a·b = |A∩B| and ‖a‖ = √|A|, so the
+    distance is O(|postings|) per center — densifying first would cost
+    O(n_docs) per term. The argmin is ``array_min`` over per-center
+    ``(dist, center_id)`` structs (struct order = ORDER BY dist, center_id),
+    map-only against the broadcast center row: no exchange of k rows per
+    point just to pick one."""
+    cand = F.transform(
+        F.col("centers"),
+        lambda c, i: F.struct(
+            (
+                1
+                - F.size(F.array_intersect("postings", c["postings"]))
+                / (
+                    F.sqrt(F.size("postings").cast("double"))
+                    * F.sqrt(F.size(c["postings"]).cast("double"))
+                )
+            ).alias("dist"),
+            (i + F.lit(1)).alias("center_id"),
+        ),
+    )
+    return (
+        points.crossJoin(F.broadcast(centers))
+        .withColumn("center_id", F.array_min(cand)["center_id"])
+        .withColumn("center", F.element_at("centers", F.col("center_id")))
+        .drop("centers")
     )
 
 
@@ -518,11 +561,6 @@ def _ref_pipeline(spark: SparkSession, sf_dir: str, stem: bool) -> DataFrame:
     # (cache, not checkpoint: deterministic plan, so eviction-recompute is
     # safe and the checkpoint write job is avoided)
     idx = inverted_index(spark, docs, stem=stem).cache()
-    # SPARSE cosine: for 0/1 incidence vectors, a·b = |A∩B| and ‖a‖ = √|A| —
-    # computed on the postings sets directly. Densifying first would cost
-    # O(n_docs) per term (quadratic overall); this is O(|postings|), which is
-    # what survives a 100 TB corpus. Dense vectors remain available via
-    # densify_incidence for reference-format export only.
     sparse = idx.select("term", "postings")
 
     # center set: the 4 alphabetically-first terms' vectors (stands in for
@@ -530,38 +568,13 @@ def _ref_pipeline(spark: SparkSession, sf_dir: str, stem: bool) -> DataFrame:
     # TakeOrdered picks them — not a row_number() window over the whole vocab
     # (single-partition sort of ~1e8 rows at a 100 TB corpus) — and
     # array_sort on (term, postings) structs numbers them by array position.
-    centers_arr = (
+    centers = (
         sparse.orderBy("term")
         .limit(4)
-        .agg(F.array_sort(F.collect_list(F.struct("term", "postings"))).alias("_cs"))
+        .agg(F.array_sort(F.collect_list(F.struct("term", "postings"))).alias("centers"))
     )
-    # per-term argmin as array_min over per-center (dist, center_id,
-    # center_term) structs — map-only; the window form exchanged 4 rows per
-    # term just to pick the minimum. Struct comparison = ORDER BY dist,
-    # center_id (center_term is functionally dependent on center_id).
-    cand = F.transform(
-        F.col("_cs"),
-        lambda c, i: F.struct(
-            (
-                1
-                - F.size(F.array_intersect("postings", c["postings"]))
-                / (
-                    F.sqrt(F.size("postings").cast("double"))
-                    * F.sqrt(F.size(c["postings"]).cast("double"))
-                )
-            ).alias("dist"),
-            (i + F.lit(1)).alias("center_id"),
-            c["term"].alias("center_term"),
-        ),
-    )
-    assigned = (
-        sparse.crossJoin(F.broadcast(centers_arr))
-        .withColumn("_best", F.array_min(cand))
-        .select(
-            "term",
-            F.col("_best.center_id").alias("center_id"),
-            F.col("_best.center_term").alias("center_term"),
-        )
+    assigned = nearest_center(sparse, centers).select(
+        "term", "center_id", F.col("center.term").alias("center_term")
     )
     return (
         assigned.groupBy("center_id", "center_term")

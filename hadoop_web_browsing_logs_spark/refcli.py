@@ -18,6 +18,18 @@ Outputs (reference text formats):
 Side files match the reference's DistributedCache inputs: stopwords = one
 word per line (ProcessData.java:423-435); centers = one incidence-vector
 string per line in the same ``[v1,v2,...,]`` format (ProcessData.java:579-590).
+A center must have one 0/1 slot per document and at least one 1; anything
+else raises ``ValueError`` naming the line.
+
+Materialize once: Job 2 consumes Job 1's index, as in the reference, but
+instead of re-reading Job 1's text output (A11) it reads the same term →
+postings index, persisted for the run. The corpus is scanned once, the
+Porter stage runs once, and the document count (the vector length) comes
+from the scan's file listing, not from a count job. Job 1 is the shared
+:func:`~.operators.text.inverted_index`, densified only for its text output;
+Job 2 is the shared sparse-cosine :func:`~.operators.text.nearest_center`.
+The ≤k cluster rows are collected once, written, and returned as a local
+frame; the index is unpersisted before returning.
 
 The reference's bugs are not reproduced (SURVEY Appendix A): cosine is real
 cosine (not XOR-power, B1), argmin is a real argmin (B2), no key-rewriting
@@ -29,18 +41,36 @@ single-digit dims).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .operators._util import one_group
 
+def _parse_centers(lines, n_docs: int) -> list[list[int]]:
+    """Parse the centers file — one ``[1,0,1,]`` vector per line, tolerating
+    the trailing comma like TokenizerMapper2's parser (ProcessData.java:545-557,
+    but for any length) — into each center's 1-based positions of its 1s.
 
-def _parse_center_line(line: str) -> list[int]:
-    """Parse the reference's vector serialization ``[1,0,1,]`` (tolerates the
-    trailing comma, like TokenizerMapper2's parser — ProcessData.java:545-557,
-    but for any length/width)."""
-    body = line.strip().lstrip("[").rstrip("]")
-    return [int(x) for x in body.split(",") if x.strip() != ""]
+    Raises ``ValueError`` naming the 1-based line when a vector does not have
+    ``n_docs`` slots, holds a value other than 0/1, or is all zeros (its
+    cosine distance would divide by zero)."""
+    centers = []
+    for lineno, line in enumerate(lines, start=1):
+        if not line.strip():
+            continue
+        body = line.strip().lstrip("[").rstrip("]")
+        slots = [x.strip() for x in body.split(",") if x.strip() != ""]
+        where = f"centers file line {lineno}"
+        if len(slots) != n_docs:
+            raise ValueError(f"{where}: {len(slots)} slots, expected one per document ({n_docs})")
+        bad = [x for x in slots if x not in ("0", "1")]
+        if bad:
+            raise ValueError(f"{where}: value {bad[0]!r} is not 0 or 1")
+        positions = [i for i, x in enumerate(slots, start=1) if x == "1"]
+        if not positions:
+            raise ValueError(f"{where}: all-zero center has no cosine distance")
+        centers.append(positions)
+    if not centers:
+        raise ValueError("centers file has no centers")
+    return centers
 
 
 def run_reference_jobs(
@@ -50,58 +80,45 @@ def run_reference_jobs(
     stopwords_file: str,
     centers_file: str,
 ) -> DataFrame:
-    """Execute Job 1 + Job 2 as one lazy DAG; write both reference-format
-    outputs; return the cluster DataFrame."""
-    from .operators.text import densify_incidence, inverted_index, remove_stopwords, stem_terms, tokenize
-    from .sources.readers import read_corpus_dir
+    """Execute Job 1 + Job 2 off one persisted term → postings index; write
+    both reference-format outputs; return the clusters ``(cluster, members)``
+    as a local frame of at most k rows."""
+    from .operators._util import local_frame
+    from .operators.text import densify_incidence, inverted_index, nearest_center
+    from .sources.readers import corpus_size, read_corpus_dir
     from .sources.writers import write_reference_text
 
     with open(stopwords_file) as fh:
         stopwords = tuple(w.strip().lower() for w in fh if w.strip())
-    with open(centers_file) as fh:
-        centers = [_parse_center_line(ln) for ln in fh if ln.strip()]
-
     corpus = read_corpus_dir(spark, input_dir)
-    n_docs = corpus.count()  # A3: corpus cardinality == vector length
+    n_docs = corpus_size(corpus)  # A3: corpus cardinality == vector length
+    with open(centers_file) as fh:
+        centers = _parse_centers(fh, n_docs)
+    centers_df = local_frame(
+        spark, {"centers": [[{"postings": p} for p in centers]]}, "centers ARRAY<STRUCT<postings: ARRAY<INT>>>"
+    )
 
-    toks = stem_terms(remove_stopwords(tokenize(corpus), spark, stopwords))
-    index = toks.groupBy("term").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("postings"),
-        F.size(F.collect_set("doc_id")).alias("df"),
-    )
-    dense = densify_incidence(index, n_docs=n_docs, one_based=True)
-    write_reference_text(dense, f"{output_dir}/inverted_index", term_col="term", vec_col="vec")
+    index = inverted_index(spark, corpus, stopwords=stopwords).select("term", "postings").persist()
+    try:
+        dense = densify_incidence(index, n_docs=n_docs, one_based=True)
+        write_reference_text(dense, f"{output_dir}/inverted_index", term_col="term", vec_col="vec")
+        rows = (
+            nearest_center(index, centers_df)
+            .groupBy("center_id")
+            .agg(F.concat_ws(" ", F.sort_array(F.collect_list("term"))).alias("members"))
+            .collect()
+        )
+    finally:
+        index.unpersist()
 
-    centers_df = spark.createDataFrame(
-        [(i + 1, vec) for i, vec in enumerate(centers)], ["center_id", "cvec"]
-    )
-    # cosine on 0/1 vectors via intersection counts (sparse-equivalent form)
-    dot = F.aggregate(
-        F.zip_with("vec", "cvec", lambda a, b: (a * b).cast("bigint")),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    norm_v = F.sqrt(F.size(F.col("postings")).cast("double"))
-    norm_c = F.sqrt(
-        F.aggregate("cvec", F.lit(0).cast("bigint"), lambda acc, x: acc + x).cast("double")
-    )
-    dist = 1 - dot / (norm_v * norm_c)
-    w = W.partitionBy("term").orderBy("dist", "center_id")
-    assigned = (
-        dense.crossJoin(F.broadcast(centers_df))
-        .select("term", "postings", "center_id", dist.alias("dist"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
-    clusters = (
-        assigned.groupBy("center_id")
-        .agg(F.concat_ws(" ", F.sort_array(F.collect_list("term"))).alias("members"))
-        .withColumn("cluster", F.row_number().over(W.partitionBy(one_group("center_id")).orderBy("center_id")))
-        .select("cluster", "members")
+    # clusters numbered 1.. in center order, skipping empty centers (B4)
+    members = [r.members for r in sorted(rows, key=lambda r: r.center_id)]
+    clusters = local_frame(
+        spark, {"cluster": list(range(1, len(members) + 1)), "members": members}, "cluster INT, members STRING"
     )
     (
-        clusters.sort("cluster")
-        .select(F.concat_ws("\t", F.col("cluster").cast("string"), F.col("members")).alias("value"))
+        clusters.select(F.concat_ws("\t", F.col("cluster").cast("string"), F.col("members")).alias("value"))
+        .coalesce(1)
         .write.mode("overwrite")
         .text(f"{output_dir}/kmeans")
     )

@@ -9,8 +9,10 @@ Reference scans (all text-file based):
   substring parse (ProcessData.java:392-401, 417) → ``F.input_file_name()`` +
   ``regexp_extract``.
 - A3 filesystem metadata scan — ``fs.getContentSummary``/``listStatus``
-  (ProcessData.java:627-645) → the corpus is a DataFrame, so corpus cardinality
-  is a plain distinct count, computed inside the same plan.
+  (ProcessData.java:627-645) → :func:`corpus_size`: the scan's own file
+  listing (``DataFrame.inputFiles()``), filtered by the same filename → doc-id
+  rule as A2. It runs no Spark job, and a zero-byte document (which a
+  ``wholetext`` scan returns no row for) still counts.
 
 The new engine's canonical storage is columnar Parquet (vectorized scan, predicate
 pushdown, column pruning — none of which the reference's text pipeline had); CSV /
@@ -20,6 +22,7 @@ JSON / text remain supported sources for ingestion parity.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,19 +120,28 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+#: A2: a corpus file's doc id is the integer filename prefix before the last
+#: dot (``17.txt`` → 17), 1-based (ProcessData.java:417, 464). ``[0-9]``,
+#: not ``\d``: Python's ``\d`` also matches non-ASCII digits, Java's does not.
+DOC_ID_PATTERN = r"([0-9]+)\.[^./]*$"
+#: doc ids are INT; ``try_cast`` turns a longer prefix into NULL (file skipped)
+_INT_MAX = 2**31 - 1
+
+
 def read_corpus_dir(spark: SparkSession, path: str) -> DataFrame:
     """Reference-parity corpus reader: a directory of ``<int>.<ext>`` text files,
     one document per file.
 
     Replaces the reference's per-line mapper + filename parse
-    (ProcessData.java:387-401): doc id = integer filename prefix before the last
-    dot, 1-based (ProcessData.java:417, 464). ``wholetext=True`` reads each file
-    as ONE row, so a document is never split into lines and re-grouped — no
-    shuffle, and line order within a document is the file's byte order by
-    construction (a line-wise read + ``collect_list`` regroup is NOT
-    order-stable after the shuffle). One file = one record; documents are
-    row-sized by definition, and file-level parallelism is preserved (one
-    input split per file).
+    (ProcessData.java:387-401): doc id per :data:`DOC_ID_PATTERN`.
+    ``wholetext=True`` reads each file as ONE row, so a document is never
+    split into lines and re-grouped — no shuffle, and line order within a
+    document is the file's byte order by construction (a line-wise read +
+    ``collect_list`` regroup is NOT order-stable after the shuffle). One
+    file = one record; documents are row-sized by definition, and
+    file-level parallelism is preserved (one input split per file). A
+    zero-byte file yields no row; count documents with :func:`corpus_size`,
+    not ``count()``.
 
     Returns ``corpus(doc_id INT, text STRING)``.
     """
@@ -139,7 +151,7 @@ def read_corpus_dir(spark: SparkSession, path: str) -> DataFrame:
             "doc_id",
             # try_cast: a non-matching filename yields "" which ANSI cast
             # would throw on (the reference threw NumberFormatException)
-            F.regexp_extract(F.col("_file"), r"(\d+)\.[^./]*$", 1).try_cast("int"),
+            F.regexp_extract(F.col("_file"), DOC_ID_PATTERN, 1).try_cast("int"),
         )
         # non-numeric filenames crash the reference with NumberFormatException
         # (SURVEY Q4); here they are skipped explicitly
@@ -148,6 +160,15 @@ def read_corpus_dir(spark: SparkSession, path: str) -> DataFrame:
         # newline on the reassembled document
         .select("doc_id", F.regexp_replace("value", r"\n$", "").alias("text"))
     )
+
+
+def corpus_size(corpus: DataFrame) -> int:
+    """A3: the number of documents of a :func:`read_corpus_dir` frame — the
+    files of its scan listing that carry a doc id, as the reference's
+    ``fs.getContentSummary`` file count (ProcessData.java:627-645). Reads the
+    listing the scan already made; runs no Spark job."""
+    ids = (re.search(DOC_ID_PATTERN, f) for f in corpus.inputFiles())
+    return sum(1 for m in ids if m is not None and int(m.group(1)) <= _INT_MAX)
 
 
 def read_csv(spark: SparkSession, path: str, schema: T.StructType | str | None = None, **options) -> DataFrame:

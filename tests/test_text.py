@@ -58,16 +58,7 @@ GOLDEN_STOPWORDS = ("the", "and", "a", "to", "was", "are", "about")
 @pytest.fixture(scope="module")
 def golden_index(spark):
     docs = spark.createDataFrame(CORPUS, ["doc_id", "text"])
-    idx = text_ops.inverted_index(spark, docs, stem=True)
-    # override default stopwords with the golden list
-    toks = text_ops.remove_stopwords(text_ops.tokenize(docs), spark, GOLDEN_STOPWORDS)
-    toks = text_ops.stem_terms(toks)
-    from pyspark.sql import functions as F
-
-    return toks.groupBy("term").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("postings"),
-        F.size(F.collect_set("doc_id")).alias("df"),
-    )
+    return text_ops.inverted_index(spark, docs, stem=True, stopwords=GOLDEN_STOPWORDS)
 
 
 def test_golden_inverted_index(golden_index):
@@ -143,6 +134,165 @@ def test_refjob_end_to_end(spark, tmp_path):
         line for f in glob.glob(f"{out}/kmeans/part-*") for line in open(f).read().splitlines()
     )
     assert job2 == ["1\tagre cat meet plai", "2\tmill poni", "3\tcaress ti"]
+
+
+def _refjob_files(tmp_path, docs: dict[str, str], stopwords, centers: str):
+    """Write the reference's four inputs under ``tmp_path``; return them."""
+    d = tmp_path / "docs"
+    d.mkdir()
+    for name, text in docs.items():
+        (d / name).write_text(text)
+    (tmp_path / "stopwords.txt").write_text("\n".join(stopwords))
+    (tmp_path / "centers.txt").write_text(centers)
+    return str(d), str(tmp_path / "out"), str(tmp_path / "stopwords.txt"), str(tmp_path / "centers.txt")
+
+
+def _refjob_outputs(out: str) -> tuple[list[str], list[str]]:
+    import glob
+
+    def lines(sub):
+        return [ln for f in sorted(glob.glob(f"{out}/{sub}/part-*")) for ln in open(f).read().splitlines()]
+
+    return lines("inverted_index"), lines("kmeans")
+
+
+def test_refjob_counts_empty_documents(spark, tmp_path):
+    """A zero-byte document yields no row from the wholetext scan but is
+    still a document: the vectors keep its slot and the clusters see it."""
+    from hadoop_web_browsing_logs_spark.refcli import run_reference_jobs
+
+    args = _refjob_files(
+        tmp_path,
+        {"1.txt": "the cats are meeting,\nand agreed to play.", "2.txt": "a cat was milling; ponies agreed.", "3.txt": ""},
+        ("the", "are", "and", "to", "a", "was", "agreed", "play", "ponies"),
+        "[1,0,0,]\n[0,1,0,]\n[0,0,1,]\n",
+    )
+    clusters = run_reference_jobs(spark, *args)
+    job1, job2 = _refjob_outputs(args[1])
+    assert job1 == ["cat\t[1,1,0,]", "meet\t[1,0,0,]", "mill\t[0,1,0,]"]
+    assert job2 == ["1\tcat meet", "2\tmill"]
+    assert [tuple(r) for r in clusters.collect()] == [(1, "cat meet"), (2, "mill")]
+
+
+@pytest.mark.parametrize(
+    "centers, message",
+    [
+        ("[1,0,0,]\n[0,1,]\n", "line 2: 2 slots, expected one per document \\(3\\)"),
+        ("[1,0,0,]\n\n[1,2,0,]\n", "line 3: value '2' is not 0 or 1"),
+        ("[0,0,0,]\n[0,1,0,]\n", "line 1: all-zero center"),
+    ],
+)
+def test_refjob_rejects_malformed_centers(spark, tmp_path, centers, message):
+    """A short center used to pad with nulls (null distance sorts first, so
+    it won every term); an all-zero one divides by zero. Both now raise,
+    naming the centers file's line, before any output is written."""
+    import os
+
+    from hadoop_web_browsing_logs_spark.refcli import run_reference_jobs
+
+    args = _refjob_files(tmp_path, {"1.txt": "cat", "2.txt": "dog", "3.txt": "cat dog"}, ("the",), centers)
+    with pytest.raises(ValueError, match=message):
+        run_reference_jobs(spark, *args)
+    assert not os.path.exists(args[1])
+
+
+def _python_refjob(docs: dict[int, str], stopwords, centers: list[list[int]]):
+    """Job 1 + Job 2 without Spark: ``docs`` by doc id 1..N, dense centers."""
+    import math
+    import re
+    import unicodedata
+
+    postings: dict[str, set[int]] = {}
+    for doc_id, text in docs.items():
+        for tok in re.split(r"\s+", text.lower().strip()):
+            tok = "".join(c for c in tok if not unicodedata.category(c).startswith("P"))
+            if tok and tok not in stopwords:
+                postings.setdefault(porter_stem(tok), set()).add(doc_id)
+    job1, clusters = [], {}
+    for term in sorted(postings):
+        p = postings[term]
+        job1.append(term + "\t[" + "".join("1," if i in p else "0," for i in range(1, len(docs) + 1)) + "]")
+        dists = [
+            (1 - sum(1 for i in p if c[i - 1]) / (math.sqrt(float(len(p))) * math.sqrt(float(sum(c)))), cid)
+            for cid, c in enumerate(centers, start=1)
+        ]
+        clusters.setdefault(min(dists)[1], []).append(term)
+    job2 = [f"{k}\t" + " ".join(sorted(clusters[cid])) for k, cid in enumerate(sorted(clusters), start=1)]
+    return job1, job2
+
+
+def test_refjob_matches_pure_python_reference(spark, tmp_path, monkeypatch):
+    """Both outputs line for line against a pure-Python Job 1/Job 2 on 30
+    seeded documents with punctuation, stopwords and a non-numeric filename
+    (skipped). Centers 1 and 2 are identical and center 3 is their
+    complement, so distance ties must go to the lower center id. Job 2 runs
+    through the shared sparse nearest-center operator."""
+    import random
+
+    from hadoop_web_browsing_logs_spark.refcli import run_reference_jobs
+
+    rng = random.Random(7)
+    vocab = ["cats", "meeting", "agreed", "ponies", "milling", "caresses", "ties", "play", "running", "logs"]
+    stop = ("the", "and", "a", "to", "was", "are", "about")
+    punct = ["", ",", ".", ";", "!", "'s", "?"]
+    n = 30
+    docs = {
+        i: " ".join(rng.choice(vocab + list(stop)) + rng.choice(punct) for _ in range(rng.randint(3, 9)))
+        for i in range(1, n + 1)
+    }
+    half = n // 2
+    centers = [
+        [1] * half + [0] * half,
+        [1] * half + [0] * half,
+        [0] * half + [1] * half,
+        [rng.randint(0, 1) for _ in range(n - 1)] + [1],
+    ]
+    files = {f"{i}.txt": text for i, text in docs.items()}
+    files["README.txt"] = "not a document: zebra"
+    args = _refjob_files(tmp_path, files, stop, "".join("[" + "".join(f"{v}," for v in c) + "]\n" for c in centers))
+
+    calls = []
+    shared = text_ops.nearest_center
+    monkeypatch.setattr(text_ops, "nearest_center", lambda *a: calls.append(1) or shared(*a))
+    run_reference_jobs(spark, *args)
+    assert calls == [1]
+    assert _refjob_outputs(args[1]) == _python_refjob(docs, set(stop), centers)
+
+
+def test_refjob_job_ceiling_and_no_storage_left(spark, tmp_path):
+    """One corpus scan feeds both jobs off a persisted index: the run stays
+    under a Spark-job ceiling and unpersists the index before returning."""
+    from hadoop_web_browsing_logs_spark.refcli import run_reference_jobs
+    from hadoop_web_browsing_logs_spark.session import release_caches
+
+    args = _refjob_files(
+        tmp_path,
+        {"1.txt": "the cats are meeting", "2.txt": "a cat was milling", "3.txt": "meetings and ties"},
+        GOLDEN_STOPWORDS,
+        "[1,0,0,]\n[0,1,1,]\n",
+    )
+    sc = spark.sparkContext
+    release_caches(spark)
+    sc.setJobGroup("refjob-ceiling", "run_reference_jobs job count")
+    try:
+        run_reference_jobs(spark, *args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("refjob-ceiling")
+    # 12 at local[4] and local[8]; rebuilding the index per output ran 23
+    assert 0 < len(jobs) <= 14, sorted(jobs)
+    assert len(sc._jsc.getPersistentRDDs()) == 0
+
+
+def test_ref_pipeline_unstemmed_oracle_through_shared_nearest_center(spark, duck, monkeypatch):
+    """The flagship's sparse assignment and refcli's Job 2 are one operator;
+    q_ref_pipeline_unstemmed still matches its DuckDB oracle through it."""
+    calls = []
+    shared = text_ops.nearest_center
+    monkeypatch.setattr(text_ops, "nearest_center", lambda *a: calls.append(1) or shared(*a))
+    assert_query_matches_oracle(spark, duck, "q_ref_pipeline_unstemmed")
+    assert calls == [1]
 
 
 # --- BM25 (round 9): scalar-reference golden + ranking properties ---------
