@@ -1971,20 +1971,13 @@ def _semdedup_salt(n_sub: Column) -> Column:
     return F.pmod(F.shiftright(h, _SEMDEDUP_SALT_SHIFT), n_sub)
 
 
-def _build_semdedup_assign(
-    vs: DataFrame, k: int, centers: DataFrame | None
-) -> DataFrame:
+def _build_semdedup_assign(vs: DataFrame, centers: DataFrame) -> DataFrame:
     """The SemDeDup assignment fold: nearest final Lloyd center per vector
     plus the row's hoisted norm, checkpointed once because every variant
     consumes it at least twice (both sides of the pair self-join)."""
     from ..functions.vector import norm
-    from .vectors import _l2sq, lloyd_kmeans
+    from .vectors import _l2sq
 
-    # pass precomputed centers to share the Lloyd materialization with
-    # other consumers (the registered query reuses fixture_lloyd_centers,
-    # the same K-row table q_vec_kmeans_lloyd emits)
-    if centers is None:
-        centers = lloyd_kmeans(vs, k)
     c_arr = centers.agg(F.collect_list(F.struct("center_id", "c")).alias("_cs"))
     best = F.array_min(
         F.transform(
@@ -2017,46 +2010,6 @@ def _build_semdedup_assign(
     )
 
 
-#: Session-scoped memo of the FIXTURE SemDeDup assignment (VERDICT r11
-#: item 4), keyed by (applicationId, sf_dir): q_dedup_semantic and
-#: q_dedup_semantic_keepfar run the identical assignment fold over the
-#: identical fixture corpus and centers — the checkpointed (vec_id,
-#: embedding, center_id, nrm) table materializes once per session, like
-#: vectors._LLOYD_MEMO one level up. The generic semantic_dedup API stays
-#: memo-free (callers own their inputs). Cleared by session.release_caches
-#: via the invalidator registry; evicted entries are best-effort
-#: unpersisted (ADVICE r11: dropping the reference alone leaks the
-#: localCheckpoint blocks until release_caches).
-_SEMDEDUP_ASSIGN_MEMO: dict[tuple[str, str], DataFrame] = {}
-_SEMDEDUP_ASSIGN_MEMO_MAX = 4
-
-from ..session import register_memo_invalidator as _reg_inv  # noqa: E402
-from ..session import register_memo_source as _reg_src  # noqa: E402
-from ..session import unpersist_checkpoint as _unpersist  # noqa: E402
-
-_reg_inv(_SEMDEDUP_ASSIGN_MEMO.clear)
-_reg_src(lambda: list(_SEMDEDUP_ASSIGN_MEMO.values()))
-
-
-def fixture_semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The registered SemDeDup queries' shared assignment table: memoized
-    checkpoint if a variant already built it this session, else computed
-    from the fixture corpus and the shared Lloyd centers and published."""
-    from .vectors import N_CENTERS, fixture_lloyd_centers
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SEMDEDUP_ASSIGN_MEMO.get(key)
-    if cached is not None:
-        return cached
-    assign = _build_semdedup_assign(
-        load_vectors(spark, sf_dir), N_CENTERS, fixture_lloyd_centers(spark, sf_dir)
-    )
-    while len(_SEMDEDUP_ASSIGN_MEMO) >= _SEMDEDUP_ASSIGN_MEMO_MAX:
-        _unpersist(_SEMDEDUP_ASSIGN_MEMO.pop(next(iter(_SEMDEDUP_ASSIGN_MEMO))))
-    _SEMDEDUP_ASSIGN_MEMO[key] = assign
-    return assign
-
-
 def semantic_dedup(
     vs: DataFrame,
     k: int,
@@ -2064,7 +2017,6 @@ def semantic_dedup(
     centers: DataFrame | None = None,
     keep: str = "min_id",
     max_cluster: int = SEMDEDUP_MAX_CLUSTER,
-    assign: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup over (vec_id, embedding) rows: cluster with
     :func:`~.vectors.lloyd_kmeans` (k centers, fixed iterations), assign
@@ -2111,10 +2063,11 @@ def semantic_dedup(
     from ..functions.vector import dot
     from .vectors import _l2sq, lloyd_kmeans
 
-    if assign is None:
-        if centers is None:
-            centers = lloyd_kmeans(vs, k)
-        assign = _build_semdedup_assign(vs, k, centers)
+    if centers is None:
+        # checkpointed: the assignment fold and the centroid_far rank both
+        # read the centers, and Lloyd must run once per call, not per read
+        centers = lloyd_kmeans(vs, k).localCheckpoint(eager=False)
+    assign = _build_semdedup_assign(vs, centers)
     # hot-cluster guard: per-cluster sub-bucket count (k-row broadcast),
     # ceil(size / max_cluster) in pure integer arithmetic both engines
     # compute identically
@@ -2132,8 +2085,6 @@ def semantic_dedup(
         # per side, but they are map-side work over the checkpoint)
         pri = sized.withColumn("pri", F.col("vec_id"))
     elif keep == "centroid_far":
-        if centers is None:
-            raise ValueError("keep='centroid_far' requires centers when assign is precomputed")
         cw = centers.select("center_id", F.col("c").alias("_c"))
         w = W.partitionBy("center_id", "salt").orderBy(F.col("dc").desc(), "vec_id")
         pri = (
@@ -2287,15 +2238,9 @@ def _semdedup_oracle() -> str:
     tags=("dedup", "iterative"),
 )
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .vectors import N_CENTERS, fixture_lloyd_centers
+    from .vectors import N_CENTERS
 
-    vs = load_vectors(spark, sf_dir)
-    return semantic_dedup(
-        vs,
-        N_CENTERS,
-        centers=fixture_lloyd_centers(spark, sf_dir),
-        assign=fixture_semdedup_assign(spark, sf_dir),
-    ).orderBy("vec_id")
+    return semantic_dedup(load_vectors(spark, sf_dir), N_CENTERS).orderBy("vec_id")
 
 def _semdedup_keepfar_oracle() -> str:
     from ..functions.vector import duck_cosine_similarity
@@ -2365,20 +2310,13 @@ def _semdedup_keepfar_oracle() -> str:
         "(round 12) the same id-salted hot-cluster guard as "
         "q_dedup_semantic, with the rank window partitioned by (center, "
         "salt) so the priority sort is bucket-bounded too — so the hash "
-        "proves the full composition including the priority order. Shares "
-        "the checkpointed assignment fold with q_dedup_semantic via the "
-        "session memo (VERDICT r11 item 4)."
+        "proves the full composition including the priority order."
     ),
     tags=("dedup", "iterative"),
 )
 def q_dedup_semantic_keepfar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .vectors import N_CENTERS, fixture_lloyd_centers
+    from .vectors import N_CENTERS
 
-    vs = load_vectors(spark, sf_dir)
     return semantic_dedup(
-        vs,
-        N_CENTERS,
-        centers=fixture_lloyd_centers(spark, sf_dir),
-        keep="centroid_far",
-        assign=fixture_semdedup_assign(spark, sf_dir),
+        load_vectors(spark, sf_dir), N_CENTERS, keep="centroid_far"
     ).orderBy("vec_id")

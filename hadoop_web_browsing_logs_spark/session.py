@@ -16,6 +16,12 @@ Config choices are scale-motivated (see SCALE.md):
 - Arrow enabled: every Python-side kernel in this engine is a Pandas UDF /
   applyInPandas (batched Arrow transfer), never a row-at-a-time Python UDF.
 - Session timezone pinned UTC so timestamp semantics match the DuckDB oracle.
+- ``local[n]`` defaults to the cores this process may run on
+  (``SPARK_GRAFT_CPUS`` overrides), so a default session never
+  oversubscribes its host.
+
+Storage has one lifecycle: query factories keep no state across calls, and
+:func:`release_caches` frees what their plans materialized.
 """
 
 from __future__ import annotations
@@ -24,7 +30,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -92,103 +98,17 @@ def get_spark(
     return spark
 
 
-#: Callbacks that drop module-level DataFrame memos (e.g. the graph
-#: operators' shared purchase-edge-list checkpoint). Registered at operator
-#: module import; release_caches MUST run them, because a memoized
-#: DataFrame whose localCheckpoint blocks were just unpersisted is a live
-#: plan over dead blocks — the next consumer would die with
-#: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (round 11: the full pytest session hit
-#: exactly this when the release_caches pin test ran between two
-#: registry-wide plan lints).
-_MEMO_INVALIDATORS: list = []
-
-
-def register_memo_invalidator(fn) -> None:
-    """Register a zero-arg callable that clears a module-level DataFrame
-    memo. Called by :func:`release_caches` before blocks are dropped."""
-    _MEMO_INVALIDATORS.append(fn)
-
-
-#: Zero-arg callables returning the LIVE memoized DataFrames (each one a
-#: direct ``localCheckpoint(eager=False)`` result — the memo-store
-#: contract). :func:`release_query_caches` keeps their blocks while
-#: dropping everything else a query pinned.
-_MEMO_SOURCES: list = []
-
-
-def register_memo_source(fn) -> None:
-    """Register a zero-arg callable yielding a module memo's live
-    DataFrames, so :func:`release_query_caches` can protect their
-    checkpoint blocks."""
-    _MEMO_SOURCES.append(fn)
-
-
-def release_query_caches(spark: SparkSession) -> int:
-    """Per-query storage hygiene (VERDICT r16 item 8): drop the cached
-    DataFrames and localCheckpoint blocks the LAST query pinned, while
-    KEEPING the adjudicated session memos (graph edge list, SemDeDup
-    assignment, Lloyd centers) alive — unlike :func:`release_caches`,
-    which clears the memos too. Query-local blocks are rebuilt from
-    parquet on every call by contract, so dropping them between queries
-    changes no result and no timed work; it only stops a 56-query session
-    from accumulating dead blocks that later queries pay for in GC and
-    storage pressure.
-
-    Safety: a memoized plan over dropped blocks crashes its next consumer
-    (the round-11 lesson), so if ANY memo entry's backing RDD cannot be
-    identified the release is skipped outright (returns -1) rather than
-    guessed at. Returns the number of RDDs released otherwise."""
-    protected: set[int] = set()
-    for source in _MEMO_SOURCES:
-        for df in source():
-            try:
-                protected.add(df._jdf.queryExecution().analyzed().rdd().id())
-            except Exception:
-                return -1  # cannot prove the memo safe — keep everything
-    spark.catalog.clearCache()
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    released = 0
-    for jrdd in list(jmap.values()):
-        if jrdd.id() not in protected:
-            jrdd.unpersist(False)
-            released += 1
-    return released
-
-
-def unpersist_checkpoint(df: "DataFrame") -> None:
-    """Best-effort: free the storage blocks behind a ``localCheckpoint``'d
-    DataFrame that is being EVICTED from a memo (ADVICE r11: dropping the
-    Python reference alone leaks the checkpoint's executor storage until
-    release_caches). A lazily-checkpointed Dataset's analyzed plan is a
-    ``LogicalRDD`` wrapping the persisted RDD, reachable via py4j; anything
-    unexpected (plan shape, a dead JVM at interpreter shutdown) degrades to
-    the documented fallback — blocks live until release_caches.
-
-    Contract: a localCheckpoint's lineage is truncated, so the evicted
-    entry is UNUSABLE after this call — callers evict only entries no live
-    plan will execute again. The registered queries honor this by always
-    re-fetching through the memo accessor at build time and collecting
-    each query before the next one builds (driver/bench/pytest all run
-    sequentially)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def release_caches(spark: SparkSession) -> int:
-    """Drop every persisted/cached block the engine has accumulated: cached
-    DataFrames (CacheManager) and the RDD blocks pinned by lazy
-    ``localCheckpoint`` frames (similarity/global-rank paths — see
-    operators/similarity.py module docstring), plus every registered
-    module-level memo that references such blocks. Returns the number of
+    """The engine's one storage-lifecycle call: drop every cached DataFrame
+    (CacheManager) and unpersist every persistent RDD, which includes the
+    blocks behind lazy ``localCheckpoint`` frames. Returns the number of
     persistent RDDs released.
 
-    Query factories deliberately do NOT unpersist their own checkpoints (the
-    consuming action happens in the caller); a long-lived session embedding
-    this engine should call this between logical requests."""
-    for invalidate in _MEMO_INVALIDATORS:
-        invalidate()
+    Query factories keep no state between calls; the checkpoints a query
+    takes are shared only inside its own plan, and their blocks outlive the
+    consuming action because that action happens in the caller. A
+    long-lived session embedding this engine should call this between
+    logical requests."""
     spark.catalog.clearCache()
     # JavaSparkContext exposes the persistent-RDD map as a java.util.Map,
     # which py4j presents dict-like

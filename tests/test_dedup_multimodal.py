@@ -163,6 +163,31 @@ def test_connected_components_long_chain_pointer_jumping(spark):
     assert got == {i: 0 for i in range(101)}
 
 
+@pytest.mark.parametrize(
+    "name,ceiling",
+    # measured at local[4] and local[8]: 29-30 and 33 jobs. Unshared
+    # centers rerun Lloyd for the centroid_far rank: keepfar then takes 39
+    [("q_dedup_semantic", 30), ("q_dedup_semantic_keepfar", 33)],
+)
+def test_semantic_dedup_runs_lloyd_once_per_call(spark, name, ceiling):
+    """One cold call builds the checkpointed Lloyd centers once and shares
+    them with every reader in its plan, so it stays under a job ceiling."""
+    from hadoop_web_browsing_logs_spark.session import release_caches
+
+    sc = spark.sparkContext
+    release_caches(spark)
+    group = f"ceiling-{name}"
+    sc.setJobGroup(group, f"{name} job count")
+    try:
+        get_query(name).fn(spark, SF_DIR).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    release_caches(spark)
+    assert 0 < len(jobs) <= ceiling, sorted(jobs)
+
+
 def test_semantic_dedup_cluster_bounded_survivors(spark):
     """Round 11: SemDeDup semantics on constructed geometry — two tight
     clusters; within each, near-identical vectors collapse onto the

@@ -365,50 +365,6 @@ def test_bfs_frontier_isolated_seed_and_cycle(spark):
     assert got == {"x": 0, "lonely": 0, "y": 1, "z": 2}
 
 
-def test_purchase_el_memo_survives_release_caches(spark):
-    """Round 11 regression: release_caches unpersists every checkpoint
-    block, so the shared purchase-edge-list memo must be invalidated with
-    them — a memoized plan over dead blocks crashed the next consumer with
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (caught by the full-suite lint
-    ordering). Sequence: materialize via the memo, release, consume again."""
-    from hadoop_web_browsing_logs_spark.operators.graph import _EL_MEMO, _purchase_el
-    from hadoop_web_browsing_logs_spark.session import release_caches
-
-    from .conftest import SF_DIR
-
-    n1 = _purchase_el(spark, SF_DIR).count()
-    assert _EL_MEMO  # memoized
-    release_caches(spark)
-    assert not _EL_MEMO  # invalidated with the blocks
-    n2 = _purchase_el(spark, SF_DIR).count()  # rebuilds, must not crash
-    assert n1 == n2
-
-
-def test_purchase_el_memo_removes_second_consumer_scan(spark):
-    """Round 11 plan pin: after any graph query materializes the shared
-    edge list, a SECOND consumer's executed plan must read the checkpointed
-    table (LogicalRDD), not re-scan lineitem/orders parquet — the
-    structural form of the measured -44% graph-family bench win."""
-    from hadoop_web_browsing_logs_spark.operators.graph import _EL_MEMO, _purchase_el
-    from hadoop_web_browsing_logs_spark.plans.registry import get_query
-    from hadoop_web_browsing_logs_spark.session import release_caches
-
-    from .conftest import SF_DIR
-
-    release_caches(spark)  # start cold: no memo entry
-    assert not _EL_MEMO
-    _purchase_el(spark, SF_DIR).count()  # first consumer materializes
-    plan = (
-        get_query("q_graph_pagerank_dangling")
-        .fn(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "lineitem" not in plan, "second consumer re-scans lineitem parquet"
-    assert "LogicalRDD" in plan or "Scan ExistingRDD" in plan, plan[:400]
-
-
 def test_coorder_edges_row_pair_multiplicity(spark):
     """Round-16 internals pin: the co-order edge build moved from a
     lineitem self-join to per-order sorted-array pair generation. The pair

@@ -4,11 +4,13 @@ stopword anti-join broadcasts, partial aggregation exists for collect_set."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from hadoop_web_browsing_logs_spark.plans.registry import get_query
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, assert_query_matches_oracle
 
 
 def _plan(spark, name: str) -> str:
@@ -555,63 +557,99 @@ def test_release_caches_drops_checkpoint_blocks(spark):
     assert jsc.getPersistentRDDs().size() == 0
 
 
-def test_release_query_caches_keeps_memos_drops_query_blocks(spark):
-    """Round 17 (VERDICT r16 item 8): the bench's between-query hygiene
-    release must drop QUERY-LOCAL checkpoint blocks and cached tables while
-    keeping the session memos alive — a memoized plan over dropped blocks
-    crashes its next consumer (the round-11 lesson), so pin both sides:
-    the memo DataFrame stays collectable after the release, and the
-    query-local pin is gone."""
-    from pyspark.sql import functions as F
-
-    from hadoop_web_browsing_logs_spark.operators.graph import _purchase_el
-    from hadoop_web_browsing_logs_spark.session import (
-        release_caches,
-        release_query_caches,
-    )
-
-    release_caches(spark)  # clean slate: no memos, no blocks
-    jsc = spark.sparkContext._jsc
-    el = _purchase_el(spark, SF_DIR)  # publishes the memo entry
-    memo_rows = el.count()  # materialize the memo's checkpoint blocks
-    local = spark.range(200).select((F.col("id") * 3).alias("x")).localCheckpoint(
-        eager=False
-    )
-    local.count()  # materialize the query-local pin
-    before = jsc.getPersistentRDDs().size()
-    assert before >= 2, "expected memo + query-local blocks pinned"
-    released = release_query_caches(spark)
-    assert released >= 1, f"expected the query-local block released, got {released}"
-    assert jsc.getPersistentRDDs().size() == before - released
-    # the memo must still be LIVE: same object returned, still collectable
-    el2 = _purchase_el(spark, SF_DIR)
-    assert el2 is el, "memo entry must survive the query-local release"
-    assert el2.count() == memo_rows  # blocks intact — no CHECKPOINT_RDD error
-    release_caches(spark)  # leave the session clean for later tests
+#: The iterative queries that checkpoint an intermediate and read it more
+#: than once inside one plan (edge list, Lloyd centers, SemDeDup assignment).
+CHECKPOINT_SHARING_QUERIES = (
+    "q_graph_pagerank",
+    "q_graph_pagerank_dangling",
+    "q_graph_label_propagation",
+    "q_graph_reachability",
+    "q_graph_bfs_frontier",
+    "q_vec_kmeans_lloyd",
+    "q_dedup_semantic",
+    "q_dedup_semantic_keepfar",
+)
 
 
-def test_unpersist_checkpoint_frees_evicted_memo_blocks(spark):
-    """Round 12 (ADVICE r11): memo eviction/displacement must free the old
-    entry's localCheckpoint storage instead of leaking it until
-    release_caches. Pin the helper end-to-end: a materialized lazy
-    checkpoint pins exactly one persistent RDD; unpersist_checkpoint drops
-    it (and stays a silent no-op on a plain un-checkpointed frame)."""
-    from pyspark.sql import functions as F
+def test_long_lived_session_reruns_and_frees_storage(spark, duck):
+    """A long-lived session runs each checkpoint-sharing query, releases its
+    storage, runs it again, and ends with no persistent RDD: every call
+    rebuilds from parquet, so a release never strands a later call."""
+    from hadoop_web_browsing_logs_spark.session import release_caches
 
-    from hadoop_web_browsing_logs_spark.session import release_caches, unpersist_checkpoint
+    for name in CHECKPOINT_SHARING_QUERIES:
+        assert_query_matches_oracle(spark, duck, name)
+        release_caches(spark)
+        assert_query_matches_oracle(spark, duck, name)
+        release_caches(spark)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
 
-    release_caches(spark)  # clean slate
-    jsc = spark.sparkContext._jsc
-    base = jsc.getPersistentRDDs().size()
-    ck = spark.range(100).select(F.col("id") * 2).localCheckpoint(eager=False)
-    ck.count()  # materialize
-    assert jsc.getPersistentRDDs().size() == base + 1
-    unpersist_checkpoint(ck)
-    assert jsc.getPersistentRDDs().size() == base
-    # best-effort contract: anything without a LogicalRDD plan degrades
-    # to a no-op, never an exception
-    unpersist_checkpoint(spark.range(3))
-    assert jsc.getPersistentRDDs().size() == base
+
+@pytest.mark.parametrize(
+    "name,table,key",
+    [
+        ("q_graph_bfs_frontier", "lineitem", "l_suppkey"),
+        ("q_dedup_semantic", "embeddings", "vec_id"),
+    ],
+)
+def test_rewritten_table_is_reread_in_the_same_session(spark, tmp_path, name, table, key):
+    """Queries keep no state between calls: after a table is rewritten in
+    place, the next call in the same session (no release_caches between)
+    matches its oracle over the rewritten files, not the first call's rows."""
+    import shutil
+
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hadoop_web_browsing_logs_spark.sources.readers import TABLE_NAMES
+
+    sf_dir = tmp_path / "sfrw"  # the comparator reads DuckDB schema "sfrw"
+    sf_dir.mkdir()
+    con = duckdb.connect()
+    con.execute("CREATE SCHEMA sfrw")
+    for t in TABLE_NAMES:
+        path = sf_dir / f"{t}.parquet"
+        shutil.copy(os.path.join(SF_DIR, f"{t}.parquet"), path)
+        con.execute(f"CREATE VIEW sfrw.{t} AS SELECT * FROM read_parquet('{path}')")
+    oracle = get_query(name).oracle
+    try:
+        assert_query_matches_oracle(spark, con, name, str(sf_dir))
+        before = sorted(con.execute(oracle).fetchall())
+        # keep the rows with an even key: about half, and (unlike a plain
+        # half of lineitem) it changes the BFS answer
+        path = sf_dir / f"{table}.parquet"
+        full = pq.read_table(path)
+        pq.write_table(full.filter(pc.equal(pc.bit_wise_and(full[key], 1), 0)), path)
+        assert sorted(con.execute(oracle).fetchall()) != before
+        assert_query_matches_oracle(spark, con, name, str(sf_dir))
+    finally:
+        con.close()
+
+
+def test_default_cpus_follow_host_affinity():
+    """Without SPARK_GRAFT_CPUS the default session is local[n] with n the
+    cores this process may run on; the variable still overrides it."""
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    code = "from hadoop_web_browsing_logs_spark.session import DEFAULT_CPUS; print(DEFAULT_CPUS)"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def default_cpus(extra: dict[str, str]) -> int:
+        out = subprocess.run(
+            [sys.executable, "-c", code],
+            env={**env, **extra},
+            cwd=repo,
+            capture_output=True,
+            text=True,
+            check=True,
+        )
+        return int(out.stdout)
+
+    assert default_cpus({}) == len(os.sched_getaffinity(0))
+    assert default_cpus({"SPARK_GRAFT_CPUS": "3"}) == 3
 
 
 def test_no_fat_payload_exchanges(registry_plans):
